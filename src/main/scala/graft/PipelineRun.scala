@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 
 /** One auditable end-to-end pipeline run (round-5 verdict item 7):
   * executes the full medallion DAG — bronze generators → silver →
@@ -20,14 +19,7 @@ import org.apache.spark.sql.SparkSession
 object PipelineRun {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("target/pipeline_run")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     new java.io.File(outDir).mkdirs()
     val (manifest, status) = telecom.Pipeline.runAll(spark, outDir)
     Files.copy(Paths.get(outDir, "run_manifest.json"),

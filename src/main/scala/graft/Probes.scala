@@ -1,31 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Evidence-gathering harnesses behind the scale-sweep attributions
   * (round-9 verdict items 2 and 6). These are not queries — they
   * print the per-round / per-bucket numbers that turn a measured
   * growth exponent into an explained one, and PLANS.md cites their
-  * output. Both mirror ScaleSweep's session shape (local[cpus],
+  * output. Both run on ScaleSweep's session (LocalSpark: local[cpus],
   * shuffle.partitions = cpus) so the numbers live in the same regime
   * as the sweep rows they explain.
   */
 object Probes {
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private[graft] def fmt(v: Double): String =
     "%.3f".formatLocal(java.util.Locale.ROOT, v)
 }
@@ -40,7 +25,7 @@ object Probes {
 object SuffixRankProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("target/sf1", "target/sf10")
-    val spark = Probes.session()
+    val spark = LocalSpark.session()
     import Probes.fmt
     dirs.foreach { dir =>
       val docs = Tables.documents(spark, dir)
@@ -77,7 +62,7 @@ object SpillAudit {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "target/sf100"
-    val spark = Probes.session()
+    val spark = LocalSpark.session()
     import Probes.fmt
     val sc = spark.sparkContext
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -133,7 +118,7 @@ object SpillAudit {
 object SrpOccupancyProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("target/sf1", "target/sf10")
-    val spark = Probes.session()
+    val spark = LocalSpark.session()
     import Probes.fmt
     import graft.operators.Similarity
     val bands = 8
@@ -211,7 +196,7 @@ object Tier1NaturalProbe {
     val out = if (args.length > 1) args(1) else "target/sf1000e"
     val budget = 64
     val k = 5
-    val spark = Probes.session()
+    val spark = LocalSpark.session()
     import Probes.fmt
 
     // embeddings-only 10x scale-up, marker-guarded like ScaleUp
@@ -302,7 +287,7 @@ object Tier1NaturalProbe {
       s""""ann_shuffle":${sw1 - sw0},"ann_spill_disk":${sd1 - sd0},"ann_spill_mem":${sm1 - sm0},""" +
       s""""gt_pairs":${gt.size},"ann_pairs":${ann.size},""" +
       s""""recall_at_$k":${fmt(recall)},"pass":${recall >= 0.9},""" +
-      s""""cpus":"${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}"}""")
+      s""""cpus":"${LocalSpark.defaultCpus}"}""")
     System.out.flush()
     try spark.stop() catch { case _: Throwable => () }
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Growth-exponent sweep over the heavy-tail queries (round-5
   * verdict item 3; round-6 item 4 added the second decade): time each
@@ -222,16 +221,8 @@ object ScaleSweep {
     // minutes-long points, for the ThirdDecadeTargets flat-claims only
     val runDecade3 = sys.env.getOrElse("SPARK_GRAFT_SF100", "0") == "1"
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.defaultCpus
+    val spark = LocalSpark.session(cpus)
 
     // key the skip on writeAll's completion marker, not table
     // existence: a crash mid-generation leaves a mixed-scale

@@ -410,20 +410,9 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val batches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "60").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_STREAM_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the top-k soak's sketch aggregate is a graft extension; the
-      // bare session made its soak row an AnalysisException here
-      // while the same code passed under Bench's extended session
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val line = measure(spark, batches, reps)
     // standalone state-soak runner (SPARK_GRAFT_STATE_BATCHES=N):
     // the same artifact Bench embeds, without the 278-query suite

@@ -57,12 +57,10 @@ object Hits {
     var auths: DataFrame = null
     var r = 0
     while (r < rounds) {
-      val aRaw = cut(e.join(broadcast(hubs.withColumnRenamed("id", "hub")), "hub")
+      auths = normalize(e.join(broadcast(hubs.withColumnRenamed("id", "hub")), "hub")
         .groupBy(col("auth").as("id")).agg(sum("score").as("raw")))
-      auths = normalize(aRaw)
-      val hRaw = cut(e.join(broadcast(auths.withColumnRenamed("id", "auth")), "auth")
+      hubs = normalize(e.join(broadcast(auths.withColumnRenamed("id", "auth")), "auth")
         .groupBy(col("hub").as("id")).agg(sum("score").as("raw")))
-      hubs = normalize(hRaw)
       r += 1
     }
     (hubs, auths)
@@ -90,12 +88,10 @@ object Hits {
     while (r < maxRounds && !converged) {
       val prevHubs = hubs
       val prevAuths = auths
-      val aRaw = cut(e.join(broadcast(hubs.withColumnRenamed("id", "hub")), "hub")
+      auths = normalize(e.join(broadcast(hubs.withColumnRenamed("id", "hub")), "hub")
         .groupBy(col("auth").as("id")).agg(sum("score").as("raw")))
-      auths = normalize(aRaw)
-      val hRaw = cut(e.join(broadcast(auths.withColumnRenamed("id", "auth")), "auth")
+      hubs = normalize(e.join(broadcast(auths.withColumnRenamed("id", "auth")), "auth")
         .groupBy(col("hub").as("id")).agg(sum("score").as("raw")))
-      hubs = normalize(hRaw)
       r += 1
       if (prevAuths != null)
         converged = unchanged(prevHubs, hubs) && unchanged(prevAuths, auths)
@@ -120,15 +116,16 @@ object Hits {
     * half-round — a broadcast exchange + an extra read of `raw` INSIDE
     * every downstream job that evaluated the normalized frame (the
     * next half-round's broadcast collect, the checkpoint, the final
-    * output), 16 of them per q205 run. `raw` is always checkpointed by
-    * the caller before normalize (the cut-the-raw rule in [[run]]'s
-    * scaladoc), so the head() is one node-sized scan of materialized
+    * output), 16 of them per q205 run. normalize cuts the raw
+    * half-round itself (the cut-the-raw rule in [[run]]'s scaladoc),
+    * so the head() is always one node-sized scan of materialized
     * blocks — same collect class as the 1-row gate scalars (q102) and
     * P-row stitches (SuffixRank) this repo already bounds.
     * Arithmetic is unchanged (same `* Scale DIV max` Long expression,
     * max now a literal), so the fixed-point trajectory — and the
     * oracle replay — is bit-identical. */
-  private def normalize(raw: DataFrame): DataFrame = {
+  private def normalize(rawHalfRound: DataFrame): DataFrame = {
+    val raw = Lineage.cut(rawHalfRound)
     val row = raw.agg(max(col("raw"))).head()
     val mx = if (row.isNullAt(0)) 1L else row.getLong(0)
     raw.select(col("id"), expr(s"raw * $Scale DIV $mx").as("score"))

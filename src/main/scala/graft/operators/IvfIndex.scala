@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index: build ONCE (codebook + cid-PARTITIONED
@@ -15,10 +14,11 @@ import org.apache.spark.sql.functions._
   * collected and pushed as a static partition filter, so the scan's
   * PartitionFilters prune at file-listing time (nprobe/numCentroids
   * of the corpus read, verified by IvfIndexSpec against the plan).
-  * Everything derived (codebook draw, assignment argmax, probe
-  * ranking, cosine) reuses the exact Similarity kernels, so a query
-  * against the index is bit-identical to ivfTopK on the same
-  * parameters — q216 certifies that with q75's own DuckDB oracle.
+  * Everything derived (codebook draw, `Similarity.ivfAssign` /
+  * `ivfProbes`, the shared cosine top-k tail) reuses the exact
+  * Similarity kernels, so a query against the index is bit-identical
+  * to `Similarity.ivfTopK` on the same parameters — q216 certifies
+  * that with q75's own DuckDB oracle.
   *
   * Layout: `$path/centroids` (cid, cvec — numCentroids rows) and
   * `$path/lists` hive-partitioned by cid (vec_id, query_vec, _n2c
@@ -188,15 +188,14 @@ object IvfIndex {
     }
   }
 
-  /** The scan-speed assignment projection (shared by build and by
-    * incremental appends). Routes through the native graft_ivf_top
-    * expression when loaded — the greatest-tree fallback stops
-    * compiling at the ⌈√n⌉ codebook sizes a real index uses. */
+  /** The scan-speed cosine assignment projection (shared by build and
+    * by incremental appends), via `Similarity.ivfAssign`. */
   def assignOnly(vectors: DataFrame,
                  cents: Array[(Long, Array[Long])]): DataFrame = {
     val sp = vectors.sparkSession
     vectors
-      .withColumn("cid", Similarity.ivfAssignAuto(sp, col("query_vec"), cents))
+      .withColumn("cid",
+        Similarity.ivfAssign(sp, col("query_vec"), cents, Similarity.Cosine))
       .withColumn("_n2c",
         Similarity.dotFast(sp, col("query_vec"), col("query_vec")))
   }
@@ -213,26 +212,16 @@ object IvfIndex {
     * visible in the plan — no reliance on runtime DPP. */
   def topK(spark: SparkSession, path: String, queries: DataFrame,
            k: Int, nprobe: Int): DataFrame = {
-    val dot = Similarity.dotFast(spark, _: org.apache.spark.sql.Column,
-      _: org.apache.spark.sql.Column)
     val cents = centroids(spark, path)
-    val probes = Similarity.ivfProbesAuto(queries, cents, nprobe)
-      .withColumn("_n2q", dot(col("qvec"), col("qvec")))
+    val probes = Similarity.ivfProbes(queries, cents, nprobe, Similarity.Cosine)
+      .withColumn("_n2q", Similarity.dotFast(spark, col("qvec"), col("qvec")))
     val probedCids = probes.select("cid").distinct()
       .collect().map(_.getLong(0)).sorted
     val lists = spark.read.parquet(s"$path/lists")
       .where(col("cid").isin(probedCids: _*))
       .withColumn("cid", col("cid").cast("long"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    lists.join(broadcast(probes), "cid")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cosine",
-        (dot(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double")))
-          .cast("double"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.cosineTopK(lists.join(broadcast(probes), "cid")
+        .filter(col("query_id") =!= col("vec_id")), k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
   }
 }

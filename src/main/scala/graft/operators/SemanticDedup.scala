@@ -39,7 +39,8 @@ object SemanticDedup {
                 cents: Array[(Long, Array[Long])]): Array[(Long, Array[Long])] = {
     val sp = corpus.sparkSession
     corpus
-      .withColumn("cid", Similarity.ivfAssignAuto(sp, col("query_vec"), cents))
+      .withColumn("cid",
+        Similarity.ivfAssign(sp, col("query_vec"), cents, Similarity.Cosine))
       .select(col("cid"), posexplode(col("query_vec")))
       .groupBy(col("cid"), col("pos"))
       .agg(sum(col("col")).as("s"))
@@ -80,8 +81,9 @@ object SemanticDedup {
     * broadcast relation (no per-task serialized-plan blowup, no
     * Janino ceiling); scoring streams through codegen; the argmax is
     * a lexicographic max of struct(score, -cid) — bit-identical
-    * semantics to [[Similarity.ivfAssignExpr]] (same exact integer
-    * dot, same sqrt, ties → smallest cid), which the spec pins.
+    * semantics to the builtin cosine `Similarity.ivfAssign` (same
+    * exact integer dot, same sqrt, ties → smallest cid), which the
+    * spec pins against `ivfAssignBuiltin`.
     *
     * Cost vs the literal path: the n×k scored stream never
     * materializes, but the per-vector argmax is one extra keyed
@@ -115,7 +117,8 @@ object SemanticDedup {
     val dot = Similarity.dotFast(sp, _: Column, _: Column)
     val cents = kmeans(corpus, k, iters)
     val assigned = corpus
-      .withColumn("cluster", Similarity.ivfAssignExpr(sp, col("query_vec"), cents))
+      .withColumn("cluster",
+        Similarity.ivfAssign(sp, col("query_vec"), cents, Similarity.Cosine))
       .withColumn("_n2", dot(col("query_vec"), col("query_vec")))
     val a = assigned.select(col("cluster"), col("vec_id").as("id_a"),
       col("query_vec").as("va"), col("_n2").as("n2a"))

@@ -56,16 +56,8 @@ object Similarity {
     val c2 = corpus.withColumn("_n2c",
       dotFast(sp, col("query_vec"), col("query_vec")))
     val q2 = queries.withColumn("_n2q", dotFast(sp, col("qvec"), col("qvec")))
-    val scored = c2.crossJoin(broadcast(q2))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cosine",
-        (dotFast(sp, col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    cosineTopK(c2.crossJoin(broadcast(q2))
+        .filter(col("query_id") =!= col("vec_id")), k)
       .drop("_n2c", "_n2q")
   }
 
@@ -222,80 +214,142 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
 
-  /** |c| from an exact integer norm² (quantized values keep every
-    * partial sum below 2^53, so the double is exact cross-engine). */
-  private def centNorm(cv: Array[Long]): Double =
-    math.sqrt(cv.map(x => x * x).sum.toDouble)
-
-  /** Nearest-centroid id as ONE codegen'd expression: greatest over k
-    * struct(score, -cid) literals — the inverted-list build is a pure
-    * projection, no join, no shuffle; the corpus keeps its scan
-    * partitioning. Score = dot(v,c)/|c| (the |v| factor is constant
-    * per row and cannot change the argmax). Ties → smallest cid. */
-  def ivfAssignExpr(spark: SparkSession, vec: Column,
-                    cents: Array[(Long, Array[Long])]): Column = {
-    val scored = cents.map { case (cid, cv) =>
-      val score = dotFast(spark, vec, array(cv.map(lit(_)): _*)).cast("double") /
-        lit(centNorm(cv))
-      struct(score.as("s"), lit(-cid).as("n"))
-    }
-    // greatest() requires >1 args; a 1-entry codebook assigns trivially
-    if (scored.length == 1) lit(cents.head._1)
-    else -greatest(scored: _*).getField("n")
+  /** The IVF distance as a value. Score is "higher is nearer" under
+    * both metrics, so assignment is the argmax and probing orders by
+    * (score desc, cid asc); ties → smallest cid either way. A case
+    * carries only what differs: the native kernel's name, the
+    * per-centroid aux value it takes, and the builtin score of an
+    * integer dot against that aux (a literal for assignment, the
+    * `aux` column of the probe codebook). Both native formulas are
+    * the builtin ones in the same double arithmetic, and every aux is
+    * exact from an integer norm² (quantized values keep every partial
+    * sum below 2^53), so the two paths agree bit for bit. */
+  sealed abstract class Metric(val nativeFn: String) {
+    def aux(cv: Array[Long]): Double
+    def score(dot: Column, aux: Column): Column
   }
 
-  /** Nearest centroid by L2 (argmin ‖v−c‖² = argmin ‖c‖² − 2v·c; the
-    * ‖v‖² term is constant per row). The residual-coding assignment:
-    * [[ivfAssignExpr]]'s cosine rule is scale-invariant and can pick
-    * an angularly-close but L2-FAR centroid, which would inflate the
-    * residuals PQ codes must then capture. Ties → smallest cid. */
-  def ivfAssignL2Expr(spark: SparkSession, vec: Column,
-                      cents: Array[(Long, Array[Long])]): Column = {
-    val scored = cents.map { case (cid, cv) =>
-      val d = (lit(cv.map(x => x * x).sum) -
-        lit(2L) * dotFast(spark, vec, array(cv.map(lit(_)): _*))).cast("double")
-      struct((-d).as("s"), lit(-cid).as("n")) // greatest ⇒ min distance
-    }
-    if (scored.length == 1) lit(cents.head._1)
-    else -greatest(scored: _*).getField("n")
+  /** dot(v,c)/|c| — the |v| factor is constant per row and cannot
+    * change the argmax. */
+  case object Cosine extends Metric("graft_ivf_top") {
+    def aux(cv: Array[Long]): Double = math.sqrt(norm2(cv).toDouble)
+    def score(dot: Column, aux: Column): Column = dot.cast("double") / aux
   }
 
-  /** Top-nprobe centroid lists per query by ascending L2 — the probe
-    * rule matching [[ivfAssignL2Expr]]'s geometry. */
-  def ivfProbesL2(queries: DataFrame, cents: Array[(Long, Array[Long])],
-                  nprobe: Int): DataFrame = {
-    val sp = queries.sparkSession
-    import sp.implicits._
-    val centDf = cents.toSeq
-      .map { case (cid, cv) => (cid, cv.toSeq, cv.map(x => x * x).sum) }
-      .toDF("cid", "cvec", "cn2")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("_pdist").asc, col("cid").asc)
-    queries.crossJoin(broadcast(centDf))
-      .withColumn("_pdist",
-        (col("cn2") - lit(2L) * dotFast(sp, col("qvec"), col("cvec"))).cast("double"))
-      .withColumn("_prank", row_number().over(w))
-      .filter(col("_prank") <= nprobe)
-      .select(col("query_id"), col("qvec"), col("cid"))
+  /** 2v·c − ‖c‖², i.e. argmin ‖v−c‖² with the per-row ‖v‖² dropped.
+    * The residual-coding assignment: cosine is scale-invariant and
+    * can pick an angularly-close but L2-FAR centroid, which would
+    * inflate the residuals PQ codes must then capture. */
+  case object L2 extends Metric("graft_ivf_top_l2") {
+    def aux(cv: Array[Long]): Double = norm2(cv).toDouble
+    def score(dot: Column, aux: Column): Column = lit(2.0) * dot.cast("double") - aux
   }
 
-  /** Top-nprobe centroid lists per query (queries are the small,
-    * broadcast-bounded side; |Q|·k probe scoring is negligible). */
+  private def norm2(cv: Array[Long]): Long = cv.map(x => x * x).sum
+
+  /** Nearest-centroid cid as one projection: the native O(k·d)-loop
+    * kernel when the graft extension registers it, the builtin
+    * greatest-tree otherwise (identical results — IvfAutoSpec pins
+    * the parity). The native path is what makes a ⌈√n⌉ codebook
+    * viable: a k-literal expression tree stops analyzing/compiling in
+    * the hundreds of centroids. */
+  def ivfAssign(sp: SparkSession, vec: Column,
+                cents: Array[(Long, Array[Long])], metric: Metric): Column =
+    if (sp.catalog.functionExists(metric.nativeFn)) {
+      val sorted = cents.sortBy(_._1)
+      element_at(cidsOf(sorted), element_at(nativeTop(vec, sorted, 1, metric), 1) + 1)
+    } else ivfAssignBuiltin(sp, vec, cents, metric)
+
+  /** Top-nprobe probe lists per query as (query_id, qvec, cid) rows:
+    * one projection + explode (native), or the builtin crossJoin +
+    * window — identical rows either way. Queries are the small,
+    * broadcast-bounded side; |Q|·k probe scoring is negligible. */
   def ivfProbes(queries: DataFrame, cents: Array[(Long, Array[Long])],
-                nprobe: Int): DataFrame = {
+                nprobe: Int, metric: Metric): DataFrame = {
+    val sp = queries.sparkSession
+    if (sp.catalog.functionExists(metric.nativeFn)) {
+      val sorted = cents.sortBy(_._1)
+      queries.select(col("query_id"), col("qvec"),
+        explode(nativeTop(col("qvec"), sorted, nprobe, metric)).as("_pidx"))
+        .select(col("query_id"), col("qvec"),
+          element_at(cidsOf(sorted), col("_pidx") + 1).as("cid"))
+    } else ivfProbesBuiltin(queries, cents, nprobe, metric)
+  }
+
+  /** The native kernel against a cid-SORTED codebook (index order ==
+    * cid order, so its tie-toward-smaller-index is the family's
+    * tie-toward-smaller-cid): the top-p codebook indices. */
+  private def nativeTop(vec: Column, sorted: Array[(Long, Array[Long])],
+                        p: Int, metric: Metric): Column =
+    call_function(metric.nativeFn, vec,
+      typedLit(sorted.map(_._2.toSeq).toSeq),
+      typedLit(sorted.map(c => metric.aux(c._2)).toSeq), lit(p))
+
+  private def cidsOf(sorted: Array[(Long, Array[Long])]): Column =
+    array(sorted.map(c => lit(c._1)): _*)
+
+  /** Builtin assignment: greatest over k struct(score, -cid) literals
+    * — a pure projection, no join, no shuffle; the corpus keeps its
+    * scan partitioning. The only path on a session without the graft
+    * extension, and the specs' parity reference. */
+  private[operators] def ivfAssignBuiltin(sp: SparkSession, vec: Column,
+      cents: Array[(Long, Array[Long])], metric: Metric): Column =
+    // greatest() requires >1 args; a 1-entry codebook assigns trivially
+    if (cents.length == 1) lit(cents.head._1)
+    else -greatest(cents.map { case (cid, cv) =>
+      val dot = dotFast(sp, vec, array(cv.map(lit(_)): _*))
+      struct(metric.score(dot, lit(metric.aux(cv))).as("s"), lit(-cid).as("n"))
+    }: _*).getField("n")
+
+  /** Builtin probes: crossJoin the broadcast codebook, rank per query
+    * by (score desc, cid asc), keep nprobe. */
+  private[operators] def ivfProbesBuiltin(queries: DataFrame,
+      cents: Array[(Long, Array[Long])], nprobe: Int, metric: Metric): DataFrame = {
     val sp = queries.sparkSession
     import sp.implicits._
     val centDf = cents.toSeq
-      .map { case (cid, cv) => (cid, cv.toSeq, centNorm(cv)) }
-      .toDF("cid", "cvec", "cnorm")
+      .map { case (cid, cv) => (cid, cv.toSeq, metric.aux(cv)) }
+      .toDF("cid", "cvec", "aux")
     val w = Window.partitionBy("query_id")
       .orderBy(col("_pscore").desc, col("cid").asc)
     queries.crossJoin(broadcast(centDf))
       .withColumn("_pscore",
-        dotFast(sp, col("qvec"), col("cvec")).cast("double") / col("cnorm"))
+        metric.score(dotFast(sp, col("qvec"), col("cvec")), col("aux")))
       .withColumn("_prank", row_number().over(w))
       .filter(col("_prank") <= nprobe)
       .select(col("query_id"), col("qvec"), col("cid"))
+  }
+
+  /** The one cosine top-k tail of every cosine search: the exact
+    * cosine of each (query_vec, qvec) pair row from the squared norms
+    * `_n2c`/`_n2q` its two sides precompute (one dot per row instead
+    * of two per PAIR; the oracle's exact dot/sqrt(n2q·n2c) double
+    * arithmetic), then the per-query top k by (cosine desc, vec_id
+    * asc) as `rank`. Callers keep their own join; `beforeRank` shapes
+    * the scored frame ahead of the window (the narrow projection and
+    * sizing of a candidate frame). */
+  private[operators] def cosineTopK(pairs: DataFrame, k: Int,
+      beforeRank: DataFrame => DataFrame = identity): DataFrame = {
+    val dot = dotFast(pairs.sparkSession, col("query_vec"), col("qvec"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+    beforeRank(pairs.withColumn("cosine", (dot.cast("double") /
+        sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+  }
+
+  /** Corpus rows with their cosine inverted-list id and squared norm,
+    * and the queries' probe lists with theirs: the two sides of an IVF
+    * candidate join. */
+  private def ivfSides(corpus: DataFrame, queries: DataFrame, nprobe: Int,
+                       cents: Array[(Long, Array[Long])]): (DataFrame, DataFrame) = {
+    val sp = corpus.sparkSession
+    (corpus
+      .withColumn("cid", ivfAssign(sp, col("query_vec"), cents, Cosine))
+      .withColumn("_n2c", dotFast(sp, col("query_vec"), col("query_vec"))),
+     ivfProbes(queries, cents, nprobe, Cosine)
+      .withColumn("_n2q", dotFast(sp, col("qvec"), col("qvec"))))
   }
 
   /** IVF-flat probed search: assign corpus rows to inverted lists
@@ -304,76 +358,13 @@ object Similarity {
     * The scale path alternative to SRP-LSH: scoring cost drops from
     * |Q|·|C| to |Q|·nprobe·E[list size]; corpus never shuffles before
     * the final top-k (which ships only candidates). */
-  /** graft_ivf_top call against a cid-SORTED codebook (index order ==
-    * cid order, so the expression's tie-toward-smaller-index is the
-    * family's tie-toward-smaller-cid). */
-  private def ivfTopExpr(vec: Column, sorted: Array[(Long, Array[Long])],
-                         p: Int): Column =
-    call_function("graft_ivf_top", vec,
-      typedLit(sorted.map(_._2.toSeq).toSeq),
-      typedLit(sorted.map(c => centNorm(c._2)).toSeq), lit(p))
-
-  /** Nearest-centroid cid as one projection: the native O(k·d)-loop
-    * expression when the graft extension is loaded, the
-    * [[ivfAssignExpr]] greatest-tree otherwise (identical results —
-    * IvfAutoSpec pins the parity). The native path is what makes a
-    * ⌈√n⌉ codebook viable: a k-literal expression tree stops
-    * analyzing/compiling in the hundreds of centroids. */
-  def ivfAssignAuto(sp: SparkSession, vec: Column,
-                    cents: Array[(Long, Array[Long])]): Column =
-    if (sp.catalog.functionExists("graft_ivf_top")) {
-      val sorted = cents.sortBy(_._1)
-      val cidByIdx = array(sorted.map(c => lit(c._1)): _*)
-      element_at(cidByIdx, element_at(ivfTopExpr(vec, sorted, 1), 1) + 1)
-    } else ivfAssignExpr(sp, vec, cents)
-
-  /** Top-nprobe probe lists per query as one projection + explode
-    * (native), or the [[ivfProbes]] crossJoin+window fallback —
-    * identical (query_id, qvec, cid) rows either way. */
-  def ivfProbesAuto(queries: DataFrame, cents: Array[(Long, Array[Long])],
-                    nprobe: Int): DataFrame = {
-    val sp = queries.sparkSession
-    if (sp.catalog.functionExists("graft_ivf_top")) {
-      val sorted = cents.sortBy(_._1)
-      val cidByIdx = array(sorted.map(c => lit(c._1)): _*)
-      queries.select(col("query_id"), col("qvec"),
-        explode(ivfTopExpr(col("qvec"), sorted, nprobe)).as("_pidx"))
-        .select(col("query_id"), col("qvec"),
-          element_at(cidByIdx, col("_pidx") + 1).as("cid"))
-    } else ivfProbes(queries, cents, nprobe)
-  }
-
-  /** L2-mode twin of [[ivfTopExpr]]: aux carries ‖c‖² (exact integer
-    * doubles), descending 2v·c − ‖c‖² ≡ ascending ‖c−v‖². */
-  private def ivfTopL2Expr(vec: Column, sorted: Array[(Long, Array[Long])],
-                           p: Int): Column =
-    call_function("graft_ivf_top_l2", vec,
-      typedLit(sorted.map(_._2.toSeq).toSeq),
-      typedLit(sorted.map(_._2.map(x => x * x).sum.toDouble).toSeq), lit(p))
-
-  /** L2 nearest-centroid assignment as one projection (native or
-    * [[ivfAssignL2Expr]] fallback, identical results). */
-  def ivfAssignL2Auto(sp: SparkSession, vec: Column,
-                      cents: Array[(Long, Array[Long])]): Column =
-    if (sp.catalog.functionExists("graft_ivf_top_l2")) {
-      val sorted = cents.sortBy(_._1)
-      val cidByIdx = array(sorted.map(c => lit(c._1)): _*)
-      element_at(cidByIdx, element_at(ivfTopL2Expr(vec, sorted, 1), 1) + 1)
-    } else ivfAssignL2Expr(sp, vec, cents)
-
-  /** L2 top-nprobe probes as one projection + explode (native or
-    * [[ivfProbesL2]] fallback, identical rows). */
-  def ivfProbesL2Auto(queries: DataFrame, cents: Array[(Long, Array[Long])],
-                      nprobe: Int): DataFrame = {
-    val sp = queries.sparkSession
-    if (sp.catalog.functionExists("graft_ivf_top_l2")) {
-      val sorted = cents.sortBy(_._1)
-      val cidByIdx = array(sorted.map(c => lit(c._1)): _*)
-      queries.select(col("query_id"), col("qvec"),
-        explode(ivfTopL2Expr(col("qvec"), sorted, nprobe)).as("_pidx"))
-        .select(col("query_id"), col("qvec"),
-          element_at(cidByIdx, col("_pidx") + 1).as("cid"))
-    } else ivfProbesL2(queries, cents, nprobe)
+  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+              numCentroids: Int, nprobe: Int): DataFrame = {
+    val (assigned, probes) =
+      ivfSides(corpus, queries, nprobe, ivfCentroids(corpus, numCentroids))
+    cosineTopK(assigned.join(broadcast(probes), "cid")
+        .filter(col("query_id") =!= col("vec_id")), k)
+      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
   }
 
   /** Corpus-scaled IVF-flat: numCentroids = ⌈√n⌉ — the balance point
@@ -392,9 +383,7 @@ object Similarity {
     *     set cannot be broadcast at 100 TB);
     *   - the per-query top-k rides WindowGroupLimit (rank ≤ k pushes
     *     a map-side partial top-k under the exchange), so the window
-    *     shuffle ships ≤ k·nprobe rows per query, not whole lists.
-    * Falls back to the compositional assign/probe (identical
-    * results) when the graft extension is not loaded. */
+    *     shuffle ships ≤ k·nprobe rows per query, not whole lists. */
   def ivfTopKAuto(corpus: DataFrame, queries: DataFrame, k: Int,
                   nprobe: Int): DataFrame = {
     val n = corpus.count()
@@ -405,19 +394,14 @@ object Similarity {
 
   /** The auto-discipline IVF search tail against an ARBITRARY
     * codebook (md5 draw, Lloyd-refined, externally trained):
-    * native-projection assign/probe, planner-chosen join side,
-    * WindowGroupLimit top-k. Centroids are (cid, integer vector) —
-    * sum vectors are fine (cosine is scale-invariant). */
+    * planner-chosen join side, WindowGroupLimit top-k. Centroids are
+    * (cid, integer vector) — sum vectors are fine (cosine is
+    * scale-invariant). */
   def ivfSearchWith(corpus: DataFrame, queries: DataFrame, k: Int,
                     nprobe: Int, cents: Array[(Long, Array[Long])],
                     knownN: Long = -1L): DataFrame = {
     val sp = corpus.sparkSession
-    val dot = dotFast(sp, _: Column, _: Column)
-    val assigned = corpus
-      .withColumn("cid", ivfAssignAuto(sp, col("query_vec"), cents))
-      .withColumn("_n2c", dot(col("query_vec"), col("query_vec")))
-    val probes = ivfProbesAuto(queries, cents, nprobe)
-      .withColumn("_n2q", dot(col("qvec"), col("qvec")))
+    val (assigned, probes) = ivfSides(corpus, queries, nprobe, cents)
     // CANDIDATE-frame sizing (the r10 sf100 find): the cid join emits
     // |Q|·nprobe·(n/numC) candidate rows — decoupled from both inputs
     // — and the rank-k window's partial top-k sorts them WITH the two
@@ -434,40 +418,13 @@ object Similarity {
     val n = if (knownN >= 0L) knownN else corpus.count()
     val est = candidateEstimate(n, nprobe, cents.length)
     val sized = graft.queries.ExplodedJoin.sizer(sp, est, col("cid"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    sized(assigned).join(sized(probes), "cid")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cosine",
-        (dot(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
-      .select(col("query_id"), col("vec_id"), col("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    cosineTopK(sized(assigned).join(sized(probes), "cid")
+        .filter(col("query_id") =!= col("vec_id")), k, narrow)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
   }
 
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              numCentroids: Int, nprobe: Int): DataFrame = {
-    val sp = corpus.sparkSession
-    val dot = dotFast(sp, _: Column, _: Column)
-    val cents = ivfCentroids(corpus, numCentroids)
-    val assigned = corpus
-      .withColumn("cid", ivfAssignExpr(sp, col("query_vec"), cents))
-      .withColumn("_n2c", dot(col("query_vec"), col("query_vec")))
-    val probes = ivfProbes(queries, cents, nprobe)
-      .withColumn("_n2q", dot(col("qvec"), col("qvec")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    assigned.join(broadcast(probes), "cid")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cosine",
-        (dot(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
-  }
+  private def narrow(scored: DataFrame): DataFrame =
+    scored.select(col("query_id"), col("vec_id"), col("cosine"))
 
   // -------------------------------------------------------------- PQ
 
@@ -486,7 +443,7 @@ object Similarity {
     val picked = ivfCentroids(corpus, ks) // md5-ordered: index == code
     Array.tabulate(m, ks) { (j, k) =>
       val cv = picked(k)._2.slice(j * subDim, (j + 1) * subDim)
-      (cv, cv.map(x => x * x).sum)
+      (cv, norm2(cv))
     }
   }
 
@@ -528,16 +485,23 @@ object Similarity {
     exactL2Rerank(pqShortlist(corpus, queries, sub, m, dim / m, shortlist),
       corpus, queries, k)
 
+  /** The (vec_id, query_vec, _n2c) corpus and (query_id, qvec, _n2q)
+    * query sides a candidate frame re-attaches its vectors from. */
+  private def normed(corpus: DataFrame, queries: DataFrame): (DataFrame, DataFrame) = {
+    val sp = corpus.sparkSession
+    (corpus.select(col("vec_id"), col("query_vec"),
+      dotFast(sp, col("query_vec"), col("query_vec")).as("_n2c")),
+     queries.select(col("query_id"), col("qvec"),
+      dotFast(sp, col("qvec"), col("qvec")).as("_n2q")))
+  }
+
   /** Exact-L2 re-rank of an (query_id, vec_id, approx_dist)
     * candidate set: fetch full vectors for candidates only, keep the
     * k best per query by integer-exact L2. */
   private def exactL2Rerank(cands: DataFrame, corpus: DataFrame,
                             queries: DataFrame, k: Int): DataFrame = {
     val sp = corpus.sparkSession
-    val c2 = corpus.select(col("vec_id"), col("query_vec"),
-      dotFast(sp, col("query_vec"), col("query_vec")).as("_n2c"))
-    val q2 = queries.select(col("query_id"), col("qvec"),
-      dotFast(sp, col("qvec"), col("qvec")).as("_n2q"))
+    val (c2, q2) = normed(corpus, queries)
     val we = Window.partitionBy("query_id")
       .orderBy(col("l2_dist").asc, col("vec_id").asc)
     cands.join(c2, "vec_id").join(broadcast(q2), "query_id")
@@ -571,10 +535,10 @@ object Similarity {
     val sub = pqCodebooks(corpus, ks, m, dim)
     val coded = corpus.select(
       col("vec_id") +:
-        ivfAssignAuto(sp, col("query_vec"), cents).as("cid") +:
+        ivfAssign(sp, col("query_vec"), cents, Cosine).as("cid") +:
         (0 until m).map(j =>
           pqCodeExpr(col("query_vec"), sub, subDim, j).as(s"c$j")): _*)
-    val probeTables = ivfProbesAuto(queries, cents, nprobe)
+    val probeTables = ivfProbes(queries, cents, nprobe, Cosine)
       .select("query_id", "cid")
       .join(pqQueryTables(queries, sub, m, subDim), "query_id")
     val wa = Window.partitionBy("query_id")
@@ -669,7 +633,7 @@ object Similarity {
     // capture (FAISS trains/assigns its coarse quantizer in L2 for
     // exactly this reason)
     val res = corpus
-      .withColumn("cid", ivfAssignL2Auto(sp, col("query_vec"), cents))
+      .withColumn("cid", ivfAssign(sp, col("query_vec"), cents, L2))
       .join(broadcast(centDf), "cid")
       .withColumn("rvec", zip_with(col("query_vec"), col("cvec"), (a, b) => a - b))
     // PQ codebooks trained on the residual frame. The draw is SALTED
@@ -685,23 +649,16 @@ object Similarity {
       .map(_.getSeq[Long](0).toArray)
     val sub = Array.tabulate(m, ks) { (j, kk) =>
       val cv = pickedRes(kk).slice(j * subDim, (j + 1) * subDim)
-      (cv, cv.map(x => x * x).sum)
+      (cv, norm2(cv))
     }
     val coded = res.select(
       col("vec_id") +: col("cid") +:
         (0 until m).map(j => pqCodeExpr(col("rvec"), sub, subDim, j).as(s"c$j")): _*)
     // per-(query, probed list) residual query → per-pair ADC tables
-    def distTable(j: Int): Column = {
-      val qj = slice(col("rqvec"), j * subDim + 1, subDim)
-      transform(pqCbLit(sub, j), e =>
-        (dotQ(qj, qj) - lit(2L) * dotQ(qj, e.getField("cv")) +
-          e.getField("n")).cast("long"))
-    }
-    val probeTables = ivfProbesL2Auto(queries, cents, nprobe)
+    val probeTables = ivfProbes(queries, cents, nprobe, L2)
       .join(broadcast(centDf), "cid")
       .withColumn("rqvec", zip_with(col("qvec"), col("cvec"), (a, b) => a - b))
-      .select(col("query_id") +: col("cid") +:
-        (0 until m).map(j => distTable(j).as(s"dt$j")): _*)
+      .select(col("query_id") +: col("cid") +: distTables(col("rqvec"), sub, m, subDim): _*)
     val wa = Window.partitionBy("query_id")
       .orderBy(col("approx_dist").asc, col("vec_id").asc)
     // Same candidate-frame discipline as ivfSearchWith (r10 sf100
@@ -741,16 +698,19 @@ object Similarity {
     * tables, one array column per subspace (broadcast by callers). */
   private def pqQueryTables(queries: DataFrame,
                             sub: Array[Array[(Array[Long], Long)]], m: Int,
-                            subDim: Int): DataFrame = {
-    def distTable(vec: Column, j: Int): Column = {
+                            subDim: Int): DataFrame =
+    queries.select(col("query_id") +: distTables(col("qvec"), sub, m, subDim): _*)
+
+  /** The ADC distance tables dt0..dt{m-1} of a query vector: exact
+    * ‖q_j − c‖² against every entry of each sub-codebook j. */
+  private def distTables(vec: Column, sub: Array[Array[(Array[Long], Long)]],
+                         m: Int, subDim: Int): Seq[Column] =
+    (0 until m).map { j =>
       val qj = slice(vec, j * subDim + 1, subDim)
       transform(pqCbLit(sub, j), e =>
         (dotQ(qj, qj) - lit(2L) * dotQ(qj, e.getField("cv")) +
-          e.getField("n")).cast("long"))
+          e.getField("n")).cast("long")).as(s"dt$j")
     }
-    queries.select(
-      col("query_id") +: (0 until m).map(j => distTable(col("qvec"), j).as(s"dt$j")): _*)
-  }
 
   /** Sum of the m ADC table lookups for one (query, code-row) pair. */
   private def adcDist(m: Int): Column =
@@ -866,7 +826,7 @@ object Similarity {
       }
     Array.tabulate(m, sub(0).length) { (j, kk) =>
       val cv = stats.getOrElse((j, kk), sub(j)(kk)._1) // empty entry: keep
-      (cv, cv.map(x => x * x).sum)
+      (cv, norm2(cv))
     }
   }
 
@@ -966,20 +926,8 @@ object Similarity {
   def exactCosineRerank(cands: DataFrame, corpus: DataFrame,
                         queries: DataFrame, k: Int,
                         carry: Seq[String] = Nil): DataFrame = {
-    val sp = corpus.sparkSession
-    val dot = dotFast(sp, _: Column, _: Column)
-    val c2 = corpus.select(col("vec_id"), col("query_vec"),
-      dot(col("query_vec"), col("query_vec")).as("_n2c"))
-    val q2 = queries.select(col("query_id"), col("qvec"),
-      dot(col("qvec"), col("qvec")).as("_n2q"))
-    val we = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    cands.join(c2, "vec_id").join(broadcast(q2), "query_id")
-      .withColumn("cosine",
-        (dot(col("query_vec"), col("qvec")).cast("double") /
-          sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double"))
-      .withColumn("rank", row_number().over(we))
-      .filter(col("rank") <= k)
+    val (c2, q2) = normed(corpus, queries)
+    cosineTopK(cands.join(c2, "vec_id").join(broadcast(q2), "query_id"), k)
       .select((Seq("query_id", "rank", "vec_id", "cosine") ++ carry)
         .map(col): _*)
   }
@@ -1092,15 +1040,7 @@ object Similarity {
       .filter(array_position(isMatch, true) === col("band") + 1)
       .filter(col("query_id") =!= col("vec_id"))
       .select("query_id", "vec_id")
-    val c2 = corpus.select(col("vec_id"), col("query_vec"),
-      dot(col("query_vec"), col("query_vec")).as("_n2c"))
-    val q2 = queries.select(col("query_id"), col("qvec"),
-      dot(col("qvec"), col("qvec")).as("_n2q"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val cosine =
-      (dot(col("query_vec"), col("qvec")).cast("double") /
-        sqrt(col("_n2q").cast("double") * col("_n2c").cast("double"))).cast("double")
+    val (c2, q2) = normed(corpus, queries)
     // NARROW pair rows re-attach the corpus vectors by vec_id (both
     // sides share the vec_id sizer — equal partition counts
     // co-partition, see ExplodedJoin scaladoc), then the query
@@ -1111,18 +1051,11 @@ object Similarity {
     val withCorpusVec = sizedV(candIds).join(sizedV(c2), "vec_id")
     val qBroadcastOk = estQueries < 0L ||
       estQueries * QueryRowBytes <= QueryBroadcastBudget
-    val scored =
-      if (qBroadcastOk)
-        sizedQ(withCorpusVec.join(broadcast(q2), "query_id")
-          .withColumn("cosine", cosine)
-          .select(col("query_id"), col("vec_id"), col("cosine")))
-      else
-        sizedQ(withCorpusVec).join(sizedQ(q2), "query_id")
-          .withColumn("cosine", cosine)
-          .select(col("query_id"), col("vec_id"), col("cosine"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    if (qBroadcastOk)
+      cosineTopK(withCorpusVec.join(broadcast(q2), "query_id"), k,
+        scored => sizedQ(narrow(scored)))
+    else
+      cosineTopK(sizedQ(withCorpusVec).join(sizedQ(q2), "query_id"), k, narrow)
   }
 
   /** ~bytes per broadcast query row (id + 64 quantized longs + norm +

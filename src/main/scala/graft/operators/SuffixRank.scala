@@ -704,7 +704,11 @@ object SuffixRank {
     * mirror of the graft_lcp expression (same mid-character backup:
     * a common UTF-16 prefix ending between the halves of a surrogate
     * pair counts only the complete characters before it; on BMP
-    * input, common code units are common code points). */
+    * input, common code units are common code points).
+    * Precondition: both strings are well-formed UTF-16. A prefix
+    * ending in an UNPAIRED high surrogate at the end of the shorter
+    * string counts it as one code point, where graft_lcp sees the
+    * replacement character its UTF-8 input carries instead. */
   private[operators] def lcpCodePoints(a: String, b: String): Int = {
     val n = math.min(a.length, b.length)
     var i = 0

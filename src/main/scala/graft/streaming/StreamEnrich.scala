@@ -65,6 +65,8 @@ object StreamEnrich {
     * join itself is what gives Spark BOTH state-eviction horizons. */
   def callsWithTowerLoadBinned(calls: DataFrame, probes: DataFrame,
                                toleranceSecs: Long): DataFrame = {
+    // 0 folds `DIV 0` to null (zero rows); < 0 breaks the two-bucket cover
+    require(toleranceSecs > 0, s"toleranceSecs must be > 0, got $toleranceSecs")
     val tolUs = toleranceSecs * 1000000L
     val c = calls
       .withColumn("_cus", unix_micros(col("call_ts")))

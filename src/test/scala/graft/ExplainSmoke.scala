@@ -1,27 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit dev loop: print a registered query's formatted physical
   * plan without running it. Usage:
   *   sbt "Test/runMain graft.ExplainSmoke q228_ivf_auto [sfDir]"
-  * The session mirrors Verify/Bench (extensions loaded, nanos flag),
-  * so the printed plan is the plan those mains execute.
+  * The session is Verify/Bench's (LocalSpark), so the printed plan is
+  * the plan those mains execute.
   */
 object ExplainSmoke {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ExplainSmoke <query_name> [sfDir]")
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(logLevel = "ERROR")
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name' — keys: ${SparkEntry.queries.keys.toSeq.sorted.take(5).mkString(", ")}..."))
     fn(spark, dir).explain("formatted")

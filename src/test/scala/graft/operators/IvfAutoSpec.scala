@@ -60,7 +60,7 @@ class IvfAutoSpec extends SparkSpec {
     assert(topL2(Seq(0L, 0L), book, 2) === Seq(0, 1))
   }
 
-  test("L2 auto helpers match the compositional assign/probe forms") {
+  test("native assign/probe == builtin, cosine and L2") {
     val sp = spark
     val c = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("query_vec"))
@@ -68,19 +68,22 @@ class IvfAutoSpec extends SparkSpec {
       .select(col("vec_id").as("query_id"), col("query_vec").as("qvec"))
     val numC = math.ceil(math.sqrt(c.count().toDouble)).toInt
     val cents = Similarity.ivfCentroids(c, numC)
-    val viaAuto = c.select(col("vec_id"),
-        Similarity.ivfAssignL2Auto(sp, col("query_vec"), cents).as("cid"))
-      .as[(Long, Long)].collect().toMap
-    val viaExpr = c.select(col("vec_id"),
-        Similarity.ivfAssignL2Expr(sp, col("query_vec"), cents).as("cid"))
-      .as[(Long, Long)].collect().toMap
-    assert(viaAuto === viaExpr)
-    val probesAuto = Similarity.ivfProbesL2Auto(q, cents, nprobe = 4)
-      .select("query_id", "cid").as[(Long, Long)].collect().sorted.toSeq
-    val probesExpr = Similarity.ivfProbesL2(q, cents, nprobe = 4)
-      .select("query_id", "cid").as[(Long, Long)].collect().sorted.toSeq
-    assert(probesAuto === probesExpr)
-    assert(probesAuto.nonEmpty)
+    for (metric <- Seq(Similarity.Cosine, Similarity.L2)) {
+      assert(spark.catalog.functionExists(metric.nativeFn), "extension not loaded")
+      val viaNative = c.select(col("vec_id"),
+          Similarity.ivfAssign(sp, col("query_vec"), cents, metric).as("cid"))
+        .as[(Long, Long)].collect().toMap
+      val viaBuiltin = c.select(col("vec_id"),
+          Similarity.ivfAssignBuiltin(sp, col("query_vec"), cents, metric).as("cid"))
+        .as[(Long, Long)].collect().toMap
+      assert(viaNative === viaBuiltin, s"assignment, $metric")
+      val probesNative = Similarity.ivfProbes(q, cents, nprobe = 4, metric)
+        .select("query_id", "cid").as[(Long, Long)].collect().sorted.toSeq
+      val probesBuiltin = Similarity.ivfProbesBuiltin(q, cents, nprobe = 4, metric)
+        .select("query_id", "cid").as[(Long, Long)].collect().sorted.toSeq
+      assert(probesNative === probesBuiltin, s"probes, $metric")
+      assert(probesNative.nonEmpty)
+    }
   }
 
   test("property: graft_ivf_top matches a plain-Scala reference on random inputs (both modes)") {
@@ -128,6 +131,7 @@ class IvfAutoSpec extends SparkSpec {
   }
 
   test("ivfTopKAuto (native projections) matches the compositional ivfTopK at sqrt(n)") {
+    val sp = spark
     val c = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("query_vec"))
     val q = c.filter(col("vec_id") % 10 === 0)
@@ -136,9 +140,25 @@ class IvfAutoSpec extends SparkSpec {
     assert(spark.catalog.functionExists("graft_ivf_top"), "extension not loaded")
     val auto = Similarity.ivfTopKAuto(c, q, k = 5, nprobe = 4)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-    val ref = Similarity.ivfTopK(c, q, k = 5, numCentroids = numC, nprobe = 4)
+    val viaTopK = Similarity.ivfTopK(c, q, k = 5, numCentroids = numC, nprobe = 4)
+      .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+    // the compositional reference: builtin greatest-tree assignment
+    // and crossJoin+window probes under the same cosine tail
+    val cents = Similarity.ivfCentroids(c, numC)
+    val dot = Similarity.dotFast(sp, _: org.apache.spark.sql.Column,
+      _: org.apache.spark.sql.Column)
+    val assigned = c
+      .withColumn("cid", Similarity.ivfAssignBuiltin(sp, col("query_vec"), cents,
+        Similarity.Cosine))
+      .withColumn("_n2c", dot(col("query_vec"), col("query_vec")))
+    val probes = Similarity.ivfProbesBuiltin(q, cents, nprobe = 4, Similarity.Cosine)
+      .withColumn("_n2q", dot(col("qvec"), col("qvec")))
+    val ref = Similarity.cosineTopK(assigned.join(probes, "cid")
+        .filter(col("query_id") =!= col("vec_id")), k = 5)
+      .select("query_id", "rank", "vec_id", "cosine")
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(auto.nonEmpty)
     assert(auto === ref)
+    assert(viaTopK === ref)
   }
 }

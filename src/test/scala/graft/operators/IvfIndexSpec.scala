@@ -63,7 +63,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(scans.forall(_.partitionFilters.nonEmpty),
       "lists scan carries no partition filter — the isin prune was lost")
     val probed = Similarity.ivfProbes(one,
-      IvfIndex.centroids(spark, path), nprobe = 2)
+      IvfIndex.centroids(spark, path), nprobe = 2, Similarity.Cosine)
       .select("cid").distinct().count()
     assert(probed === 2)
   }

@@ -71,7 +71,8 @@ class SemanticDedupSpec extends SparkSpec {
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("query_vec"))
     val cents = Similarity.ivfCentroids(real, 16)
     val viaLiteral = real
-      .withColumn("cluster", Similarity.ivfAssignExpr(spark, col("query_vec"), cents))
+      .withColumn("cluster", Similarity.ivfAssignBuiltin(spark, col("query_vec"), cents,
+        Similarity.Cosine))
       .select(col("vec_id"), col("cluster"))
       .as[(Long, Long)].collect().toMap
     val centTable = cents.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }

@@ -119,11 +119,11 @@ class SimilaritySpec extends SparkSpec {
     assert(cents.length == 8)
     val cidSet = cents.map(_._1).toSet
     val assigned = quantized
-      .withColumn("cid", Similarity.ivfAssignExpr(spark, col("query_vec"), cents))
+      .withColumn("cid", Similarity.ivfAssign(spark, col("query_vec"), cents, Similarity.Cosine))
       .select("cid").as[Long].collect()
     assert(assigned.length == quantized.count())
     assert(assigned.forall(cidSet.contains))
-    val probes = Similarity.ivfProbes(queries, cents, nprobe = 3)
+    val probes = Similarity.ivfProbes(queries, cents, nprobe = 3, Similarity.Cosine)
       .groupBy("query_id").count().select("count").as[Long].collect()
     assert(probes.forall(_ == 3))
   }

@@ -113,6 +113,15 @@ class StreamEnrichSpec extends SparkSpec {
     assert(ri.nonEmpty)
   }
 
+  test("binned batch face rejects a non-positive tolerance") {
+    val calls = callRows.toDF("event_id", "tower_id", "call_ts")
+    val probes = probeRows.toDF("tower_id", "probe_ts", "load_pct")
+    for (tol <- Seq(0L, -1L))
+      intercept[IllegalArgumentException] {
+        StreamEnrich.callsWithTowerLoadBinned(calls, probes, toleranceSecs = tol)
+      }
+  }
+
   test("stream-stream join state EVICTS: rows plateau as watermarks advance") {
     implicit val sqlCtx = spark.sqlContext
     val cMem = MemoryStream[(String, String, Timestamp)]
